@@ -457,8 +457,13 @@ class Dataset:
         The reference's canonical row order (sort by ``id_vars + [index]``,
         reference :282-287) doubles as its cache-friendly physical layout.
         The Spark analog: one explicit shuffle here lets a following chain
-        of per-trace operators (windows over id_vars, ``applyInPandas``
-        groupings) reuse the exchange instead of each inserting its own."""
+        of per-trace window operators reuse the exchange instead of each
+        inserting its own.
+
+        Pass ``num_partitions``: only a repartition with an explicit count
+        keeps its partitions. Without one the shuffle uses
+        ``spark.sql.shuffle.partitions`` and AQE coalesces a small frame
+        to one partition, so the chain runs as one task."""
         parts = [F.col(c) for c in self._id_vars] or [F.col(self._index)]
         df = (
             self._df.repartition(num_partitions, *parts)
@@ -634,18 +639,18 @@ class Dataset:
     def _trace_window(self):
         """The per-trace window every rolling/cumulative/ranking op rides.
 
-        **Parallelism contract** (VERDICT r3): any operator built on this
-        window — ``rolling_*``, ``cum_*``, ``diff``, ``pct_change``,
-        ``ewm_mean`` — and any grouped-map kernel over the same keys
-        (``regrid``, ``smooth``, ``fourier``) parallelizes across TRACES:
-        max concurrent tasks = the id_vars key cardinality, whatever the
-        cluster size. That is inherent to per-trace semantics (the
-        reference has the identical property: one thread per group), not
-        a plan defect. With few, long traces, split the work upstream
-        (e.g. coarse time buckets as an extra id_var) or accept the cap;
-        with many traces (the 100 TB shape), ``partition_hint()`` once
-        before a chain of these ops buys exchange reuse on top of full
-        parallelism."""
+        **Parallelism contract**: a window over this spec plans one
+        shuffle on id_vars into ``spark.sql.shuffle.partitions``
+        partitions, which AQE then merges up to its minimum partition
+        size (1 MB by default) — a small frame runs as ONE task whatever
+        the cluster size. On a large frame concurrency is at most the
+        trace count, since a trace is never split. ``rolling_quantiles``
+        avoids the cap by chunking traces across partitions; the
+        grouped-map kernels (``regrid``, ``interpolate_frame``,
+        ``fourier_transform``, ``lomb_scargle``) shuffle through
+        ``session.group_traces`` into one partition per core.
+        ``partition_hint(n)`` before a chain of window ops fixes their
+        partition count the same way."""
         return Window.partitionBy(*self._id_vars).orderBy(self._index)
 
     def cum_sum(self, *cols) -> "Dataset":
@@ -1059,6 +1064,9 @@ class Dataset:
                 raise ValueError(f"rolling_quantiles: {name}: q={q} not in [0, 1]")
         if window_size < 1:
             raise ValueError("rolling_quantiles: window_size must be >= 1")
+        taken = [n for n in qs if n in self._df.columns]
+        if taken:
+            raise ValueError(f"rolling_quantiles: output columns {taken} already exist")
         w1 = window_size - 1
         keys = list(self._id_vars)
         index = self._index

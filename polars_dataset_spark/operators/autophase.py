@@ -26,6 +26,8 @@ import math
 from pyspark.sql import functions as F
 
 from polars_dataset_spark.core import Dataset
+from polars_dataset_spark.plans.inspect import _executed, is_python_path
+from polars_dataset_spark.session import pin
 
 __all__ = ["autophase", "zero_quadrature", "fit_phase"]
 
@@ -52,8 +54,16 @@ def fit_phase(ds: Dataset, x_col: str, y_col: str) -> float:
 def autophase(ds: Dataset, x_col: str, y_col: str, phi: float | None = None) -> Dataset:
     """Rotate (X, Y) by the fitted (or given) phase:
     ``X' = X cosφ − Y sinφ``, ``Y' = X sinφ + Y cosφ`` — Y' carries the
-    minimized quadrature residual."""
+    minimized quadrature residual.
+
+    Fitting φ is an action over the input. If the input's plan runs a
+    Python stage (a regrid, say), it is pinned first, so the fit and the
+    rotated output read one materialization instead of running the
+    Python stage twice. A plain scan is cheaper to read twice than to
+    pin, so it stays unpinned."""
     if phi is None:
+        if is_python_path(_executed(ds.df)):
+            ds = ds._rewrap(pin(ds.df, eager=True))
         phi = fit_phase(ds, x_col, y_col)
     s, c = math.sin(phi), math.cos(phi)
     X, Y = F.col(x_col), F.col(y_col)

@@ -8,8 +8,9 @@ non-negative frequency with amplitude / real / imaginary components.
 
 Requires a uniform index (regrid first for jittered sweeps); spacing is
 taken from the per-trace median step and the output frequency column is in
-cycles per index-unit. Runs as ``groupBy(id_vars).applyInPandas`` — same
-single-shuffle profile as regrid.
+cycles per index-unit. Runs as ``applyInPandas`` over
+``session.group_traces`` — the same single shuffle into one partition per
+core as regrid.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ from pyspark.sql import types as T
 
 from polars_dataset_spark.core import Dataset
 from polars_dataset_spark.operators.structs import sanitize_columns, unnest_structs
+from polars_dataset_spark.session import group_traces
 
 __all__ = ["fourier_transform", "lomb_scargle"]
 
@@ -59,8 +61,7 @@ def fourier_transform(ds: Dataset, value_vars=None, freq_name: str = "frequency"
             out[f"{c}_abs"] = np.abs(spec)
         return pd.DataFrame(out)
 
-    grouped = flat_df.groupBy(*id_vars) if id_vars else flat_df.groupBy()
-    result = grouped.applyInPandas(fn, schema=out_schema)
+    result = group_traces(flat_df, id_vars).applyInPandas(fn, schema=out_schema)
     return Dataset(result, index=freq_name, id_vars=id_vars).sort_columns()
 
 
@@ -77,9 +78,9 @@ def lomb_scargle(
     (trace, frequency) with ``{v}_power`` per value var.
 
     Same single-shuffle grouped-map profile as regrid/fourier: one
-    ``groupBy(id_vars).applyInPandas`` pass, the vectorised O(n·m) trig
-    kernel (``kernels.lomb_scargle_power``) inside, the frequency grid a
-    closure broadcast. Traces are physically bounded sweeps, so per-group
+    ``applyInPandas`` pass over ``session.group_traces``, the vectorised
+    O(n·m) trig kernel (``kernels.lomb_scargle_power``) inside, the
+    frequency grid a closure broadcast. Traces are physically bounded sweeps, so per-group
     memory is n·m doubles at most."""
     import numpy as _np
 
@@ -116,6 +117,5 @@ def lomb_scargle(
             )
         return pd.DataFrame(out)
 
-    grouped = flat_df.groupBy(*id_vars) if id_vars else flat_df.groupBy()
-    result = grouped.applyInPandas(fn, schema=out_schema)
+    result = group_traces(flat_df, id_vars).applyInPandas(fn, schema=out_schema)
     return Dataset(result, index=freq_name, id_vars=id_vars).sort_columns()

@@ -12,18 +12,22 @@ Reference parity (``/root/reference/polars_dataset.py:212-238`` plus helper
 - groups are processed independently (reference ``map_groups``
   ``:225-229``).
 
-Spark-first realization: ``groupBy(*id_vars).applyInPandas`` — groups are
-hash-shuffled to executors once, handed to Python workers as Arrow batches,
-the numpy kernel (:mod:`polars_dataset_spark.kernels`) runs per group, and
-Arrow carries results back. The grid is a small numpy array captured in the
+Spark-first realization: ``applyInPandas`` over
+:func:`polars_dataset_spark.session.group_traces` — traces are
+hash-shuffled once into ``defaultParallelism`` partitions, handed to
+Python workers as Arrow batches, the numpy kernel
+(:mod:`polars_dataset_spark.kernels`) runs per group, and Arrow carries
+results back. The grid is a small numpy array captured in the
 UDF closure (broadcast with the task, never a join). Output schema is
 declared up front from the input schema: id_vars keep their types, index
 and value columns become double.
 
-Scale: one shuffle keyed by id_vars; skewed trace sizes are bounded by
-physics (one sweep), so groups are small and uniform — the ideal
-applyInPandas workload. At 100 TB ≈ 10^9 traces this parallelizes to any
-executor count with no driver involvement.
+Scale: one shuffle keyed by id_vars into one partition per core, so the
+kernel runs on every core whenever there are at least as many traces as
+cores (fewer traces cap it at the trace count: a trace is never split).
+Trace sizes are bounded by physics (one sweep), so groups are small and
+uniform — the ideal applyInPandas workload — and there is no driver
+involvement at any trace count.
 
 ``interpolate_frame`` is the PCHIP variant (historical reference op,
 ``/root/reference/build/lib/polars_dataset.py:304-328``): monotone
@@ -46,6 +50,7 @@ from polars_dataset_spark.operators.structs import (
     sanitize_columns,
     unnest_structs,
 )
+from polars_dataset_spark.session import group_traces
 
 __all__ = ["regrid", "interpolate_frame"]
 
@@ -75,10 +80,9 @@ def regrid(
     by default; naming an id_var swaps that id_var with the index first
     (reference role-swap, ``/root/reference/polars_dataset.py:219-223``).
 
-    One hash shuffle on ``id_vars``, then an Arrow batch per trace;
-    parallelism = trace cardinality (see ``Dataset._trace_window`` for
-    the per-trace parallelism contract and the ``partition_hint()``
-    recipe for chains of per-trace ops).
+    One hash shuffle on ``id_vars`` into ``defaultParallelism``
+    partitions, then an Arrow batch per trace; concurrent tasks =
+    min(cores, trace count) (see ``group_traces``).
     """
     grid, grid_name = _grid_array(x)
     name = name or grid_name or ds.index
@@ -110,15 +114,7 @@ def regrid(
             out[c] = interp_trace(xs, pdf[c].to_numpy(dtype=np.float64), grid, method=method, bc_type=bc_type)
         return pd.DataFrame(out)
 
-    if id_vars:
-        result = flat_df.groupBy(*id_vars).applyInPandas(fn, schema=out_schema)
-    else:
-        # single global trace: applyInPandas over a constant key
-        result = (
-            flat_df.withColumn("_g", flat_df[index] * 0)
-            .groupBy("_g")
-            .applyInPandas(lambda p: fn(p.drop(columns=["_g"])), schema=out_schema)
-        )
+    result = group_traces(flat_df, id_vars).applyInPandas(fn, schema=out_schema)
     result = rebuild_structs(restore_columns(result, dot_map), schema_map)
     out = Dataset(result, index=index, id_vars=id_vars)
     return out.sort_columns()
@@ -162,7 +158,6 @@ def interpolate_frame(
             out[c] = interp_trace(xs, pdf[c].to_numpy(dtype=np.float64), grid, method="pchip")
         return pd.DataFrame(out)
 
-    grouped = flat_df.groupBy(*id_vars) if id_vars else flat_df.groupBy()
-    result = grouped.applyInPandas(fn, schema=out_schema)
+    result = group_traces(flat_df, id_vars).applyInPandas(fn, schema=out_schema)
     result = rebuild_structs(restore_columns(result, dot_map), schema_map)
     return Dataset(result, index=index, id_vars=id_vars).sort_columns()

@@ -98,6 +98,24 @@ def pin(df, eager: bool = False):
     return df.localCheckpoint(eager=eager)
 
 
+def group_traces(df, keys):
+    """``df.groupBy(*keys)`` for a per-trace grouped-map kernel, with the
+    trace shuffle fixed at ``defaultParallelism`` partitions (one task per
+    core).
+
+    A plain ``groupBy`` shuffle of a small frame falls under AQE's
+    minimum partition size (1 MB by default), so AQE coalesces it into
+    ONE partition and the ``applyInPandas`` kernel runs as a single task
+    whatever the core count. A repartition with an explicit count is
+    never coalesced, and the ``groupBy`` on the same keys reuses its hash
+    partitioning instead of adding a second exchange. A trace is never
+    split: its rows hash to one partition."""
+    if not keys:
+        return df.groupBy()
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n, *keys).groupBy(*keys)
+
+
 def ensure_parallelism(df, min_parts: int | None = None):
     """Round-robin repartition a DataFrame whose plan currently yields
     fewer partitions than the session's core count — used by operators

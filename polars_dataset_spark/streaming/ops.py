@@ -673,7 +673,6 @@ def stream_heavy_hitters(
             sub = sorted(counters.values(), reverse=True)[k]
             counters = {i: c - sub for i, c in counters.items() if c > sub}
         rows = sorted(counters.items())
-        cache["state"] = rows
         # pandas input -> Arrow local relation: ONE partition, one small
         # file (a python-list relation would inherit defaultParallelism
         # partitions, and coalesce(1) over those measures ~6 s here)
@@ -683,6 +682,8 @@ def stream_heavy_hitters(
         )
         merged.write.mode("overwrite").parquet(f"{state_path}__staging")
         swap_state(spark, state_path)
+        # only a batch the durable state absorbed may enter the cache
+        cache["state"] = rows
 
     # availableNow: drain-everything-then-terminate. All callers feed a
     # fully-materialized file listing and drain once; self-termination

@@ -1,4 +1,5 @@
 import math
+import re
 
 import numpy as np
 import pandas as pd
@@ -17,6 +18,7 @@ from polars_dataset_spark.operators import (
     unnest_structs,
     zero_quadrature,
 )
+from polars_dataset_spark.plans.inspect import _executed
 
 
 @pytest.fixture(scope="module")
@@ -144,6 +146,43 @@ def test_autophase_zeroes_quadrature(spark):
     # in-phase channel keeps the full amplitude (up to sign)
     power = rot.df.agg(F.sum(F.col("X") * F.col("X"))).first()[0]
     assert power == pytest.approx(float(np.sum(amp**2)), rel=1e-9)
+
+
+def _sweeps(spark, n_traces, points=40):
+    """``n_traces`` lock-in sweeps (X, Y) keyed by ``g``."""
+    xs = np.linspace(0.0, 5.0, points)
+    pdf = pd.concat(
+        pd.DataFrame({"g": g, "t": xs, "X": np.sin(xs + g), "Y": 0.4 * np.sin(xs + g)})
+        for g in range(n_traces)
+    )
+    return Dataset(spark.createDataFrame(pdf), index="t", id_vars=["g"])
+
+
+def test_regrid_shuffles_traces_into_one_partition_per_core(spark):
+    # AQE coalesces a plain groupBy shuffle of a small frame into one
+    # partition; the explicit-count repartition keeps one task per core
+    n = spark.sparkContext.defaultParallelism
+    out = regrid(_sweeps(spark, 2 * n), np.linspace(0.5, 4.5, 9)).df
+    below = _executed(out).split("FlatMapGroupsInPandas", 1)[1]
+    assert re.search(rf"hashpartitioning\(g#\d+L?, {n}\), REPARTITION_BY_NUM", below)
+    assert out.rdd.getNumPartitions() == n
+
+
+def test_autophase_pins_only_a_python_stage_input(spark, tmp_path):
+    regridded = regrid(_sweeps(spark, 8), np.linspace(0.5, 4.5, 9))
+    rot = autophase(regridded, "X", "Y")
+    # fit and rotation read the pinned regrid rows: the kernel runs once
+    assert "FlatMapGroupsInPandas" not in _executed(rot.df)
+    phi = fit_phase(regridded, "X", "Y")
+    want = autophase(regridded, "X", "Y", phi=phi).df.orderBy("g", "t").toPandas()
+    got = rot.df.orderBy("g", "t").toPandas()
+    pd.testing.assert_frame_equal(got, want)
+    # a plain scan is cheaper to read twice than to pin
+    path = str(tmp_path / "sweeps.parquet")
+    _sweeps(spark, 4).df.write.parquet(path)
+    scan = Dataset(spark.read.parquet(path), index="t", id_vars=["g"])
+    plan = _executed(autophase(scan, "X", "Y").df)
+    assert "FileScan parquet" in plan and "ExistingRDD" not in plan
 
 
 def test_zero_quadrature_struct(spark):

@@ -10,12 +10,26 @@ import pytest
 from polars_dataset_spark.session import pin
 
 
-def test_pin_default_is_local_checkpoint(spark, monkeypatch):
+def _files_under(cdir):
+    found = []
+    for _root, _dirs, files in os.walk(cdir.replace("file:", "")):
+        found.extend(files)
+    return sorted(found)
+
+
+def test_pin_default_is_local_checkpoint(spark, monkeypatch, tmp_path):
     monkeypatch.delenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", raising=False)
+    ckpt = tmp_path / "ckpt"
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(ckpt))
+    had_dir = spark.sparkContext.getCheckpointDir()
+    before = _files_under(had_dir) if had_dir else []
     df = pin(spark.range(10), eager=True)
     assert df.count() == 10
-    # local checkpoint: no reliable checkpoint files were written
-    assert not df._jdf.queryExecution().analyzed().toString().startswith("Join")
+    # local checkpoint: no checkpoint dir is applied and no file is written
+    assert spark.sparkContext.getCheckpointDir() == had_dir
+    assert not ckpt.exists()
+    if had_dir:
+        assert _files_under(had_dir) == before
 
 
 def test_pin_reliable_flag_writes_checkpoint_files(spark, monkeypatch, tmp_path):
@@ -27,10 +41,7 @@ def test_pin_reliable_flag_writes_checkpoint_files(spark, monkeypatch, tmp_path)
     assert df.count() == 10
     cdir = had_dir or ckpt
     # reliable checkpoint materializes RDD files under the checkpoint dir
-    found = []
-    for root, _dirs, files in os.walk(cdir.replace("file:", "")):
-        found.extend(files)
-    assert found, f"no reliable checkpoint files under {cdir}"
+    assert _files_under(cdir), f"no reliable checkpoint files under {cdir}"
 
 
 def test_pin_reliable_flag_without_dir_raises(spark, monkeypatch):

@@ -157,3 +157,12 @@ def test_invalid_args(spark):
         ds.rolling_quantiles("v", {"out": 0.5}, 0)
     with pytest.raises(ValueError, match="not in"):
         ds.rolling_quantiles("v", {"out": 1.5}, 3)
+
+
+def test_output_name_collision_raises(spark):
+    sdf = spark.createDataFrame(_frame(n=10))
+    ds = Dataset(sdf, index="x", id_vars=["g"])
+    with pytest.raises(ValueError, match="already exist"):
+        ds.rolling_quantiles("v", {"v": 0.5}, 3)
+    with pytest.raises(ValueError, match="already exist"):
+        ds.rolling_quantiles("v", {"out": 0.5, "g": 0.25}, 3)
