@@ -17,16 +17,25 @@ implemented here directly:
 Everything is vectorized numpy over one trace (one group) at a time; traces
 are small by construction (one sweep), so an O(n) tridiagonal solve (or a
 dense solve for the not-a-knot rows at small n) is microseconds per group.
+
+Every per-trace operator's closure refers to a function here, so a Python
+worker imports this module when it unpickles one; the import installs
+:mod:`polars_dataset_spark.worker_zipcache` in that worker.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
+from polars_dataset_spark import worker_zipcache
+
+worker_zipcache.install()
+
 __all__ = [
     "cubic_spline_interp",
     "pchip_interp",
     "interp_trace",
+    "rfft_trace",
     "savgol_coeffs",
     "savgol_smooth",
     "lomb_scargle_power",
@@ -221,6 +230,17 @@ def interp_trace(
     if method == "linear":
         return np.interp(np.asarray(xq, dtype=np.float64), x, y)
     raise ValueError(f"unknown interpolation method {method!r}")
+
+
+def rfft_trace(x: np.ndarray, ys) -> tuple[np.ndarray, list[np.ndarray]]:
+    """Real FFT of one trace sampled on a uniform, sorted index ``x``: the
+    non-negative frequencies (cycles per index unit, spacing taken from the
+    median step) and one spectrum per value array in ``ys`` (NaN read as
+    0). Needs at least 2 samples."""
+    x = np.asarray(x, dtype=np.float64)
+    freqs = np.fft.rfftfreq(x.size, d=float(np.median(np.diff(x))))
+    specs = [np.fft.rfft(np.nan_to_num(np.asarray(y, dtype=np.float64))) for y in ys]
+    return freqs, specs
 
 
 def savgol_coeffs(window: int, polyorder: int) -> np.ndarray:

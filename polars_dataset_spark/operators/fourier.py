@@ -20,6 +20,7 @@ import pandas as pd
 from pyspark.sql import types as T
 
 from polars_dataset_spark.core import Dataset
+from polars_dataset_spark.kernels import lomb_scargle_power, rfft_trace
 from polars_dataset_spark.operators.structs import sanitize_columns, unnest_structs
 from polars_dataset_spark.session import group_traces
 
@@ -47,15 +48,12 @@ def fourier_transform(ds: Dataset, value_vars=None, freq_name: str = "frequency"
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(index)
         xs = pdf[index].to_numpy(dtype=np.float64)
-        n = xs.size
-        if n < 2:
+        if xs.size < 2:
             return pd.DataFrame({f.name: pd.Series(dtype="float64") for f in out_fields})
-        step = float(np.median(np.diff(xs)))
-        freqs = np.fft.rfftfreq(n, d=step)
+        freqs, specs = rfft_trace(xs, [pdf[c].to_numpy(dtype=np.float64) for c in vv])
         out = {iv: np.repeat(pdf[iv].iloc[0], freqs.size) for iv in id_vars}
         out[freq_name] = freqs
-        for c in vv:
-            spec = np.fft.rfft(np.nan_to_num(pdf[c].to_numpy(dtype=np.float64)))
+        for c, spec in zip(vv, specs):
             out[f"{c}_re"] = spec.real
             out[f"{c}_im"] = spec.imag
             out[f"{c}_abs"] = np.abs(spec)
@@ -82,11 +80,7 @@ def lomb_scargle(
     O(n·m) trig kernel (``kernels.lomb_scargle_power``) inside, the
     frequency grid a closure broadcast. Traces are physically bounded sweeps, so per-group
     memory is n·m doubles at most."""
-    import numpy as _np
-
-    from polars_dataset_spark.kernels import lomb_scargle_power
-
-    fgrid = _np.asarray(list(freqs), dtype=_np.float64)
+    fgrid = np.asarray(list(freqs), dtype=np.float64)
     flat_df, _ = unnest_structs(ds.df)
     flat_df, _dots = sanitize_columns(flat_df)
     index = ds.index

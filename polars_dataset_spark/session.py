@@ -44,6 +44,11 @@ def get_spark(app_name: str = "polars_dataset_spark", shuffle_partitions: int | 
         # instead of inheriting defaults, and turn on the worker
         # faulthandler so a crashing worker logs WHY (segfault/OOM) rather
         # than dying silently into a retry.
+        # With reuse on, Spark's pythonInitTime (init_time − boot_time) is
+        # not per-task setup: pyspark.worker.main stamps boot_time before
+        # it blocks waiting for the next task, so the metric also counts
+        # the time a reused worker sat idle. Per-task cost is read from
+        # executor run time or from a probe inside the worker.
         .config("spark.python.worker.reuse", "true")
         .config("spark.python.worker.memory", os.environ.get("SPARK_GRAFT_PY_WORKER_MEM", "1g"))
         .config("spark.python.worker.faulthandler.enabled", "true")
